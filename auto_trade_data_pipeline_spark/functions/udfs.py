@@ -51,7 +51,7 @@ def vwap_agg_udf(price: pd.Series, volume: pd.Series) -> float:
 # ---------------------------------------------------------------------------
 
 #: NY-day minute bounds, one row per W12 session —
-#: EXACTLY the partition _session_preds (operators/windows.py:54)
+#: EXACTLY the partition _SESSION_PRED_SQL (operators/windows.py)
 #: encodes as per-row predicates; the parity test joins this calendar
 #: against the flags and asserts they agree minute-for-minute.
 SESSION_BOUNDS = [

@@ -28,6 +28,8 @@ t3.diff(60).fillna(0) (``:386-438``, ``:429-452``).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 
@@ -37,7 +39,7 @@ from pyspark.sql import types as T
 from auto_trade_data_pipeline_spark.functions import cdl as cdl_mod
 from auto_trade_data_pipeline_spark.functions import ta
 
-__all__ = ["enrich_indicators", "INDICATOR_COLUMNS", "CDL_NAMES"]
+__all__ = ["enrich_indicators", "ta_scan_by_key", "INDICATOR_COLUMNS", "CDL_NAMES"]
 
 CDL_NAMES: tuple[str, ...] = tuple(cdl_mod.ALL_PATTERNS.keys())
 
@@ -275,6 +277,44 @@ def enrich_indicators(
     return u.groupBy("symbol", "__grp").applyInPandas(
         _chunk_kernel, schema=schema
     ).drop(*[c for c in INTERNAL_COLS if c in schema.fieldNames()])
+
+
+def ta_scan_by_key(
+    df: DataFrame,
+    key_cols: list[str],
+    order_col: str,
+    payload_cols: list[str],
+    scans: dict[str, tuple[str, Callable[[pd.DataFrame], object]]],
+) -> DataFrame:
+    """Run recursive numpy kernels (EMA, Wilder ATR, Kalman, Holt,
+    Heikin-Ashi open — ``functions/ta.py``) per key: one Arrow-batched
+    ``applyInPandas`` per key sorts the tape on ``order_col`` (stable
+    mergesort) and adds one output column per ``scans`` entry,
+    ``{name: (spark_type_ddl, fn(sorted_pdf) -> column)}``.
+
+    Output columns: ``key_cols`` + ``order_col`` + ``payload_cols`` +
+    one column per ``scans`` entry. NULL payloads reach the kernels as
+    NaN, and NaN in float outputs crosses the Arrow boundary as NULL,
+    so warm-up rows read NULL, as the DuckDB oracles emit them."""
+    proj = df.select(*key_cols, order_col, *payload_cols)
+    out_schema = T.StructType(
+        list(proj.schema.fields)
+        + [
+            T.StructField(name, T._parse_datatype_string(ddl))
+            for name, (ddl, _fn) in scans.items()
+        ]
+    )
+    items = list(scans.items())
+    out_cols = [*key_cols, order_col, *payload_cols]
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order_col, kind="mergesort").reset_index(drop=True)
+        out = pdf[out_cols].copy()
+        for name, (_ddl, fn) in items:
+            out[name] = fn(pdf)
+        return out
+
+    return proj.groupBy(*key_cols).applyInPandas(kernel, schema=out_schema)
 
 
 _SPARK_TYPES = {

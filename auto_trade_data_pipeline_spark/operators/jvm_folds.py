@@ -1,70 +1,38 @@
-"""Pure-JVM scan folds for the EMA-class recursive indicators.
+"""Pure-JVM chunked scan fold: a per-key left-to-right recursion
+expressed as Catalyst ``aggregate()`` higher-order expressions over a
+per-key ``collect_list`` array, with no Python worker or Arrow hop.
+Its caller is the doc-atomic sequence packing (``packing_scan_sql``;
+corpus ``sequence_packing`` / ``sequence_packing_sharded``), whose
+DuckDB oracle replays the same fold as a prefix ``list_reduce``.
 
-The recursive TA kernels (``functions/ta.py``) are left-to-right IEEE
-scalar folds — inherently per-symbol sequential. Round-4 shipped them
-as interpreted numpy loops inside ``applyInPandas``; this module
-re-expresses each recursion as Catalyst ``aggregate()`` higher-order
-expressions over a per-key ``collect_list`` array. Same fold, same
-operand order, same doubles — so the existing DuckDB ``list_reduce``
-oracles (and the numpy kernels, kept as the documented fallback /
-parity reference) stay bit-exact — but the hot loop now runs JVM-side
-with zero Python/Arrow transfer (round-4 verdict item 2; the pattern
-was first proven for LZ78 in ``sign_lz78_complexity``).
+The EMA-class TA recursions (EMA, Wilder ATR, Kalman, Holt,
+Heikin-Ashi open) do not run here: they run only as the numpy kernels
+(``operators/indicators.py:ta_scan_by_key``). Catalyst evaluates
+higher-order-function lambdas interpreted, about 10x slower per
+element than the kernels' CPython float loop, and the corpus tapes
+(about 2,000 rows per symbol at sf0.01, 20,000 at sf0.1) are long
+enough for that to dominate.
 
 **Chunked scan, not a naive appending fold.** A scan accumulator that
 ``array_append``s every output copies the whole output array per
-element — O(n²), a scale-killer on million-row symbol tapes. Instead
-the input array is sliced into ``CHUNK``-sized blocks and ONE outer
-fold walks the blocks: per block, an inner fold advances the state
+element — O(n²), a scale-killer on million-row tapes. Instead the
+input array is sliced into ``CHUNK``-sized blocks and ONE outer fold
+walks the blocks: per block, an inner fold advances the state
 element-by-element and appends to a block-local output (O(CHUNK)
 copies per element), and the outer accumulator appends one block
-reference. Total work O(n·CHUNK) with identical element order —
-bit-exactness is untouched because the state sequence is the same
-fold, just materialized in blocks. SQL has no let-binding, so the
-single-evaluation of a sub-expression is done with the
-``transform(array(<expr>), v -> <body>)[0]`` idiom.
+reference. Total work O(n·CHUNK) with identical element order. SQL
+has no let-binding, so the single-evaluation of a sub-expression is
+done with the ``transform(array(<expr>), v -> <body>)[0]`` idiom.
 
-Each recursion is declared as (state type, init, update(st, x),
+A recursion is declared as (state type, init, update(st, x),
 emit(new_st)) and compiled by :func:`_scan_sql`; emit always derives
 from the POST-update state. Catalyst evaluates ``named_struct``
 fields against the old accumulator (no DuckDB-style in-place update),
-so coupled recursions (Holt) are safe with the new-state expression
-inlined.
+so coupled recursions are safe with the new-state expression inlined.
 
-Reference parity: the recursions mirror the TA-Lib definitions the
-reference calls through ``talib`` (``src/candle_to_calcs.py:60-120``);
-see each ``functions/ta.py`` kernel for the from-spec derivation.
-
-Scale shape: one ``collect_list`` per key — parallelism is symbol
-cardinality, state O(tape length) per task, the same shape as the
-applyInPandas path it replaces (a serial recursion cannot do better
-without the chunked approximation in ``operators/blocked.py`` /
-``indicators_chunked_pack``); the blocked output keeps array copying
-linear-per-element.
-
-**Measured crossover (local[32], round 5).** Catalyst evaluates
-higher-order-function lambdas INTERPRETED (no whole-stage codegen),
-at roughly 1 µs/element vs ~0.1 µs/element for the tight CPython
-float loop in the numpy kernels. What the JVM path removes instead is
-the fixed per-group cost: Python worker spin-up, Arrow
-serialization, pandas assembly. Net effect, measured here:
-
-- 5 symbols x 16-20k rows (the sf0.1 bench shape): JVM fold equal or
-  faster (kalman_price_smooth 0.61 s vs 0.72 s on the numpy path) —
-  upstream aggregation dominates and the Arrow hop is gone.
-- 5 symbols x 100k rows: numpy path ~6x faster (0.8 s vs 5.1 s for a
-  2-EMA scan) — per-element interpretation dominates.
-
-Rule of thumb: prefer these folds for many-group / bounded-tape
-shapes and for removing the Python-worker dependency; prefer the
-numpy kernels (``operators/indicators.py`` pack) for few very long
-tapes. Both are bit-identical, so swapping is a pure perf decision.
-
-All constants are embedded via ``repr()`` — the shortest round-trip
-decimal parses to the identical double on the JVM, DuckDB, and
-CPython. NULL (not NaN) marks warm-up rows: the Arrow path converted
-numpy NaN to NULL at the boundary, so NULL is what the oracles and
-the driver have always compared against.
+Scale shape: one ``collect_list`` per key — parallelism is key
+cardinality, state O(tape length) per task; the blocked output keeps
+array copying linear-per-element.
 """
 
 from __future__ import annotations
@@ -78,11 +46,6 @@ from pyspark.sql import functions as F
 CHUNK = 1024
 
 
-def _d(x: float) -> str:
-    """Exact double literal for SQL embedding."""
-    return f"CAST({x!r} AS DOUBLE)"
-
-
 def _scan_sql(
     arr: str,
     init: str,
@@ -94,8 +57,10 @@ def _scan_sql(
     """Compile a recursion into a chunked O(n·chunk) scan expression.
 
     ``update`` uses ``st`` (pre-state) and ``x`` (element); ``emit``
-    uses ``ns`` (post-state). Returns SQL producing
-    ``array<out_type>`` with one element per input element, in order.
+    uses ``ns`` (post-state). Input elements are wrapped as
+    ``named_struct('v', e)``, so ``update`` reads the element as
+    ``x.v``. Returns SQL producing ``array<out_type>`` with one element
+    per input element, in order.
     """
     empty_out = f"CAST(array() AS ARRAY<{out_type}>)"
     empty_chunks = f"CAST(array() AS ARRAY<ARRAY<{out_type}>>)"
@@ -129,115 +94,6 @@ def _scan_sql(
     return f"transform(array({arr}), s0 -> {body})[0]"
 
 
-def _scan_sql_struct(
-    arr: str,
-    elem_type: str,
-    init: str,
-    update: str,
-    emit: str,
-    out_type: str,
-    chunk: int = CHUNK,
-) -> str:
-    """Variant of :func:`_scan_sql` for struct-typed input elements
-    (``x`` exposes the struct's fields). ``elem_type`` is the input
-    element's SQL type, e.g. ``STRUCT<o: DOUBLE, c: DOUBLE>``."""
-    empty_out = f"CAST(array() AS ARRAY<{out_type}>)"
-    empty_chunks = f"CAST(array() AS ARRAY<ARRAY<{out_type}>>)"
-    inner_step = f"""(a2, x) -> transform(
-        array({update.replace("st.", "a2.st.")}),
-        ns -> named_struct('st', ns, 'o', array_append(a2.o, {emit}))
-    )[0]"""
-    # As in _scan_sql: bind the input array once as s0 so transform/
-    # zip_with inputs are materialized a single time, not per chunk.
-    body = f"""aggregate(
-      CASE WHEN size(s0) = 0 THEN CAST(array() AS ARRAY<ARRAY<{elem_type}>>)
-           ELSE transform(sequence(0, (size(s0) - 1) div {chunk}),
-                          c -> slice(s0, c * {chunk} + 1, {chunk}))
-      END,
-      named_struct('st', {init}, 'out', {empty_chunks}),
-      (acc, ch) -> transform(
-        array(aggregate(ch,
-                        named_struct('st', acc.st, 'o', {empty_out}),
-                        {inner_step})),
-        r -> named_struct('st', r.st, 'out', array_append(acc.out, r.o))
-      )[0],
-      acc -> flatten(acc.out)
-    )"""
-    return f"transform(array({arr}), s0 -> {body})[0]"
-
-
-# The double-element scans wrap each element as named_struct('v', e)
-# so one code path (_scan_sql) serves arrays of doubles; updates
-# reference the element as x.v.
-
-
-def ema_scan_sql(arr: str, period: int, chunk: int = CHUNK) -> str:
-    """``array<double> -> array<double>`` TA-Lib EMA scan
-    (``functions/ta.py:ema``): NULL while warming up, the
-    sequential-fold SMA of the first ``period`` finite values at the
-    seed index, then ``prev + (x - prev) * k``. Leading NULLs (a
-    cascaded EMA's warm-up, e.g. the MACD signal line) are passed
-    through without consuming warm-up count."""
-    k = _d(2.0 / (period + 1.0))
-    p = f"CAST({period} AS DOUBLE)"
-    init = f"named_struct('cnt', 0, 'acc', {_d(0.0)}, 'prev', {_d(0.0)})"
-    update = f"""CASE
-        WHEN x.v IS NULL AND st.cnt = 0 THEN named_struct(
-          'cnt', 0, 'acc', st.acc, 'prev', st.prev)
-        WHEN st.cnt < {period} - 1 THEN named_struct(
-          'cnt', st.cnt + 1, 'acc', st.acc + x.v, 'prev', st.prev)
-        WHEN st.cnt = {period} - 1 THEN named_struct(
-          'cnt', st.cnt + 1, 'acc', st.acc + x.v, 'prev', (st.acc + x.v) / {p})
-        ELSE named_struct(
-          'cnt', st.cnt + 1, 'acc', st.acc,
-          'prev', (x.v - st.prev) * {k} + st.prev)
-      END"""
-    emit = f"CASE WHEN ns.cnt >= {period} THEN ns.prev ELSE CAST(NULL AS DOUBLE) END"
-    return _scan_sql(arr, init, update, emit, "DOUBLE", chunk)
-
-
-def wilder_atr_scan_sql(tr_arr: str, period: int, chunk: int = CHUNK) -> str:
-    """``array<double> -> array<double>`` Wilder ATR scan over a
-    true-range array (``functions/ta.py:atr``): TR[0] is excluded from
-    the seed (it has no previous close), the seed SMA of TR[1..period]
-    lands at index ``period``, then
-    ``(prev * (period-1) + tr) / period``."""
-    p = f"CAST({period} AS DOUBLE)"
-    pm1 = f"CAST({period - 1} AS DOUBLE)"
-    init = f"named_struct('i', 0, 'acc', {_d(0.0)}, 'prev', {_d(0.0)})"
-    update = f"""CASE
-        WHEN st.i = 0 THEN named_struct('i', 1, 'acc', st.acc, 'prev', st.prev)
-        WHEN st.i < {period} THEN named_struct(
-          'i', st.i + 1, 'acc', st.acc + x.v, 'prev', st.prev)
-        WHEN st.i = {period} THEN named_struct(
-          'i', st.i + 1, 'acc', st.acc + x.v, 'prev', (st.acc + x.v) / {p})
-        ELSE named_struct(
-          'i', st.i + 1, 'acc', st.acc,
-          'prev', (st.prev * {pm1} + x.v) / {p})
-      END"""
-    emit = f"CASE WHEN ns.i > {period} THEN ns.prev ELSE CAST(NULL AS DOUBLE) END"
-    return _scan_sql(tr_arr, init, update, emit, "DOUBLE", chunk)
-
-
-def kalman_scan_sql(arr: str, q: float, r: float, chunk: int = CHUNK) -> str:
-    """``array<double> -> array<double>`` 1-D random-walk Kalman scan
-    (``functions/ta.py:kalman_filter``): seed x = z[0], p = 1; then
-    pp = p + q, k = pp/(pp+r), x += k*(z-x), p = (1-k)*pp. The gain
-    subexpression is inlined twice — deterministic IEEE, identical
-    value both times (the DuckDB oracle does the same)."""
-    qs, rs = _d(q), _d(r)
-    gain = f"(st.p + {qs}) / (st.p + {qs} + {rs})"
-    init = f"named_struct('n', 0, 'x', {_d(0.0)}, 'p', {_d(1.0)})"
-    update = f"""CASE
-        WHEN st.n = 0 THEN named_struct('n', 1, 'x', x.v, 'p', {_d(1.0)})
-        ELSE named_struct(
-          'n', st.n + 1,
-          'x', st.x + ({gain}) * (x.v - st.x),
-          'p', ({_d(1.0)} - {gain}) * (st.p + {qs}))
-      END"""
-    return _scan_sql(arr, init, update, "ns.x", "DOUBLE", chunk)
-
-
 def packing_scan_sql(arr: str, capacity: int, chunk: int = CHUNK) -> str:
     """``array<double> -> array<bigint>`` greedy contiguous
     sequence-packing scan (LLM context-window prep): items arrive in
@@ -258,159 +114,12 @@ def packing_scan_sql(arr: str, capacity: int, chunk: int = CHUNK) -> str:
     return _scan_sql(arr, init, update, "ns.bin", "BIGINT", chunk)
 
 
-def holt_scan_sql(arr: str, alpha: float, beta: float, chunk: int = CHUNK) -> str:
-    """``array<double> -> array<struct<l:double, b:double>>`` Holt
-    linear (double-exponential level + trend) scan
-    (``functions/ta.py:holt_linear``): seed l = z[0], b = 0; then
-    l' = alpha*z + (1-alpha)*(l+b) and b' = beta*(l'-l) + (1-beta)*b.
-    The coupled read is safe here: Catalyst evaluates every
-    ``named_struct`` field against the OLD accumulator (no DuckDB-style
-    in-place update), so l' is inlined into b's expression."""
-    a, b_ = _d(alpha), _d(beta)
-    one_a, one_b = _d(1.0 - alpha), _d(1.0 - beta)
-    lnew = f"({a} * x.v + {one_a} * (st.l + st.b))"
-    init = f"named_struct('n', 0, 'l', {_d(0.0)}, 'b', {_d(0.0)})"
-    update = f"""CASE
-        WHEN st.n = 0 THEN named_struct('n', 1, 'l', x.v, 'b', {_d(0.0)})
-        ELSE named_struct(
-          'n', st.n + 1,
-          'l', {lnew},
-          'b', {b_} * ({lnew} - st.l) + {one_b} * st.b)
-      END"""
-    emit = "named_struct('l', ns.l, 'b', ns.b)"
-    return _scan_sql(arr, init, update, emit, "STRUCT<l: DOUBLE, b: DOUBLE>", chunk)
-
-
-def ha_open_scan_sql(bars_arr: str, chunk: int = CHUNK) -> str:
-    """``array<struct<o,c,hc>> -> array<double>`` Heikin-Ashi open scan
-    (``functions/ta.py:heikin_ashi``): ha_open[0] = (o0+c0)/2, then
-    ha_open[i] = (ha_open[i-1] + ha_close[i-1]) / 2. The element struct
-    must carry fields named o, c, hc (raw open, raw close, ha_close)."""
-    init = f"named_struct('n', 0, 'prev', {_d(0.0)}, 'last_hc', {_d(0.0)})"
-    update = f"""CASE
-        WHEN st.n = 0 THEN named_struct(
-          'n', 1, 'prev', (x.o + x.c) / {_d(2.0)}, 'last_hc', x.hc)
-        ELSE named_struct(
-          'n', st.n + 1,
-          'prev', (st.prev + st.last_hc) / {_d(2.0)},
-          'last_hc', x.hc)
-      END"""
-    return _scan_sql_struct(
-        bars_arr,
-        "STRUCT<o: DOUBLE, c: DOUBLE, hc: DOUBLE>",
-        init,
-        update,
-        "ns.prev",
-        "DOUBLE",
-        chunk,
-    )
-
-
-#: Rows-per-key routing threshold (measured on local[32], round 6 —
-#: tools/measure_crossover.py): Catalyst evaluates higher-order-
-#: function lambdas INTERPRETED at ~1 µs/element vs ~0.1 µs/element
-#: for the numpy kernels' CPython float loop, while the numpy path
-#: pays a fixed per-GROUP Python-worker/Arrow/pandas-assembly cost.
-#: Measured grid (kalman+EMA scan, min of 3, noop sink):
-#:   2000 keys x  64 rows/key: JVM 1.29 s vs numpy 7.02 s (0.18x)
-#:   2000 keys x 256 rows/key: JVM 1.74 s vs numpy 1.82 s (~1x)
-#:      5 keys x 512 rows/key: JVM 0.51 s vs numpy 0.34 s (1.5x)
-#:      5 keys x  16k rows/key: JVM 2.66 s vs numpy 0.32 s (8.3x)
-#: The per-GROUP fixed cost makes ROWS PER KEY the routing variable:
-#: below ~256-512 the fold wins (and drops the Python-worker
-#: dependency); above it interpretation dominates and the kernels
-#: win. Both paths are bit-identical (tests/test_jvm_folds.py), so
-#: routing is a pure perf decision.
-CROSSOVER_ROWS_PER_KEY = 512
-
-
-def rows_per_key_estimate(sf_dir: str, table: str, n_keys: int) -> int | None:
-    """Upper-bound tape-length estimate: total parquet rows (footer
-    metadata only — driver-side, zero Spark jobs, no data scan)
-    divided by the key cardinality. Callers pass the source table
-    feeding the tape (candle tapes are bounded above by their tick
-    count) and a key-cardinality hint (symbol count).
-
-    Returns ``None`` (with a loud warning) when the layout is not
-    glob-readable on the driver's local filesystem — URI-scheme dirs
-    (``s3a://...``), renamed tables. The estimate is a pure perf
-    routing hint: an unreadable layout must degrade to the default
-    arm (``rows_per_key=None`` → the JVM fold), never crash a query
-    that would otherwise run. Callers on non-local layouts who know
-    their tape shape should pass an explicit ``rows_per_key`` to
-    :func:`scan_by_key` instead."""
-    import glob as _glob
-    import os as _os
-    import warnings as _warnings
-
-    import pyarrow.parquet as _pq
-
-    path = _os.path.join(sf_dir, f"{table}.parquet")
-    files = (
-        [path]
-        if _os.path.isfile(path)
-        else _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-    if not files:
-        # Loud (the interpreted JVM fold loses ~6x on long tapes, so a
-        # silent fallback could mask the exact regression the routing
-        # exists to fix) but AVAILABLE: the hint must never turn a
-        # runnable query into a build-time crash on URI-scheme layouts.
-        _warnings.warn(
-            f"rows_per_key_estimate: no parquet files glob-readable under "
-            f"{path!r} (URI-scheme or non-local layout?) — falling back to "
-            "the JVM fold arm; pass an explicit rows_per_key to scan_by_key "
-            "to restore shape routing",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return None
-    total = sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
-    return max(1, total // max(1, n_keys))
-
-
-def _scan_by_key_numpy(
-    df: DataFrame,
-    key_cols: list[str],
-    order_col: str,
-    payload_cols: list[str],
-    numpy_scans: dict,
-) -> DataFrame:
-    """The long-tape arm of :func:`scan_by_key`: one Arrow-batched
-    ``applyInPandas`` per key runs each numpy kernel over the
-    stably-sorted tape. NaN in float outputs crosses the Arrow
-    boundary as NULL — the same warm-up contract the JVM folds emit."""
-    from pyspark.sql.types import StructField, StructType, _parse_datatype_string
-
-    proj = df.select(*key_cols, order_col, *payload_cols)
-    out_schema = StructType(
-        list(proj.schema.fields)
-        + [
-            StructField(name, _parse_datatype_string(ddl))
-            for name, (ddl, _fn) in numpy_scans.items()
-        ]
-    )
-    items = list(numpy_scans.items())
-    out_cols = [*key_cols, order_col, *payload_cols]
-
-    def kernel(pdf):
-        pdf = pdf.sort_values(order_col, kind="mergesort").reset_index(drop=True)
-        out = pdf[out_cols].copy()
-        for name, (_ddl, fn) in items:
-            out[name] = fn(pdf)
-        return out
-
-    return proj.groupBy(*key_cols).applyInPandas(kernel, schema=out_schema)
-
-
 def scan_by_key(
     df: DataFrame,
     key_cols: list[str],
     order_col: str,
     payload_cols: list[str],
     scans: dict[str, Column | str],
-    numpy_scans: dict | None = None,
-    rows_per_key: int | None = None,
 ) -> DataFrame:
     """Collect ``payload_cols`` per key ordered by ``order_col``, apply
     each scan expression (referring to the collected array as ``s``,
@@ -423,49 +132,10 @@ def scan_by_key(
 
     CONTRACT: ``(key_cols, order_col)`` must be UNIQUE per row. The
     tape is ordered by ``array_sort`` over ``struct(order_col,
-    payload...)``, which breaks order ties by comparing payload values
-    — for duplicate order values the recursion input order (hence the
-    result) would differ from the stable-mergesort numpy arm. Every
-    call site orders on a bucketed/deduplicated timestamp, where the
-    pair is unique by construction. Payload doubles must be FINITE or
-    NULL, with NULL only as a leading warm-up prefix (the cascaded-EMA
-    shape) — NaN inputs are outside the parity contract: the numpy
-    kernels skip non-finite warm-up values while the JVM folds test
-    ``IS NULL``, so a NaN-bearing tape could route-differently.
-    Candle tapes satisfy this by construction (aggregates of finite
-    prices are finite; gaps are NULL).
-
-    Shape routing: when ``numpy_scans`` (``{name: (spark_type_ddl,
-    fn(sorted_pdf) -> column)}`` — same names as ``scans``) and a
-    ``rows_per_key`` estimate (see :func:`rows_per_key_estimate`) are
-    supplied and the estimate is at or above
-    ``CROSSOVER_ROWS_PER_KEY``, the bit-identical numpy kernels run
-    instead of the interpreted JVM fold (round-6: the round-5
-    fold-everywhere routing regressed kalman 2.3x at sf0.1).
-
-    For layouts :func:`rows_per_key_estimate` cannot read (URI-scheme
-    dirs, views, non-parquet sources) pass the shape you know
-    directly — any upper bound of the same order works, only the
-    side of the crossover matters::
-
-        scan_by_key(df, ["symbol"], "ts", ["close"], scans,
-                    numpy_scans=numpy_scans,
-                    rows_per_key=df.count() // n_symbols)  # or a constant
+    payload...)``, which breaks order ties by comparing payload values,
+    so duplicate order values would feed the recursion in payload
+    order rather than arrival order.
     """
-    if numpy_scans is not None and set(numpy_scans) != set(scans):
-        # A name mismatch would otherwise surface only ABOVE the
-        # crossover as a missing output column — a scale-dependent
-        # break the routing abstraction exists to preclude.
-        raise ValueError(
-            f"numpy_scans keys {sorted(numpy_scans)} must match scans "
-            f"keys {sorted(scans)}"
-        )
-    if (
-        numpy_scans is not None
-        and rows_per_key is not None
-        and rows_per_key >= CROSSOVER_ROWS_PER_KEY
-    ):
-        return _scan_by_key_numpy(df, key_cols, order_col, payload_cols, numpy_scans)
     lists = df.groupBy(*key_cols).agg(
         F.array_sort(F.collect_list(F.struct(order_col, *payload_cols))).alias("s")
     )

@@ -20,10 +20,14 @@ from __future__ import annotations
 from functools import reduce
 from operator import add
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 NY_TZ = "America/New_York"
+
+
+#: The per-symbol event-time window clause of the SQL-text families.
+_SYMBOL_SPEC = "PARTITION BY symbol ORDER BY timestamp"
 
 
 def symbol_window(order_cols: tuple[str, ...] = ("timestamp",)) -> Window:
@@ -55,25 +59,6 @@ def with_typical_price(df: DataFrame) -> DataFrame:
     )
 
 
-#: (flag, predicate builder) in reference order
-#: (``src/candle_to_calcs.py:366-377``). h = NY hour, m = NY minute.
-def _session_preds(h: Column, m: Column) -> list[tuple[str, Column]]:
-    return [
-        ("is_overnight_early", (h >= 0) & (h < 2)),
-        ("is_overnight_late", (h >= 2) & (h < 4)),
-        ("is_early_morning", (h >= 4) & (h < 8)),
-        ("is_premarket_early", (h >= 8) & (h < 9)),
-        ("is_premarket_morn", (h == 9) & (m < 30)),
-        ("is_morning", ((h == 9) & (m >= 30)) | (h == 10)),
-        ("is_late_morning", (h == 11) | ((h == 12) & (m < 30))),
-        ("is_midday", ((h == 12) & (m >= 30)) | (h == 13)),
-        ("is_early_afternoon", (h == 14) | ((h == 15) & (m < 30))),
-        ("is_late_afternoon", ((h == 15) & (m >= 30)) | ((h == 16) & (m < 30))),
-        ("is_closing", ((h == 16) & (m >= 30)) | ((h == 17) & (m < 1))),
-        ("is_afterhours", ((h == 17) & (m >= 1)) | (h >= 18)),
-    ]
-
-
 SESSION_FLAGS = [
     "is_overnight_early",
     "is_overnight_late",
@@ -90,11 +75,10 @@ SESSION_FLAGS = [
 ]
 
 
-#: SQL-text twins of ``_session_preds`` ({h} = NY hour, {m} = NY
-#: minute) — identical predicates, parsed in one selectExpr call
-#: instead of ~80 py4j expression-construction round trips (round-10
-#: build-latency pass; ``_session_preds`` remains the Column-form
-#: reference and tests pin the two forms equal).
+#: (flag, predicate) in reference order
+#: (``src/candle_to_calcs.py:366-377``); {h} = NY hour, {m} = NY
+#: minute. SQL text, parsed in one selectExpr call instead of ~80 py4j
+#: expression-construction round trips.
 _SESSION_PRED_SQL = [
     ("is_overnight_early", "{h} >= 0 AND {h} < 2"),
     ("is_overnight_late", "{h} >= 2 AND {h} < 4"),
@@ -156,72 +140,18 @@ def with_running_daily_extrema(df: DataFrame) -> DataFrame:
     )
 
 
-def _bollinger_cols(df: DataFrame, w, period: int, nbdev: float) -> DataFrame:
-    # Evaluate each window aggregate ONCE: referencing the raw window
-    # expressions from bb_upper/bb_lower as well as bb_mid makes the
-    # Window operator carry count/avg three times and stddev twice
-    # (Catalyst does not dedup window expressions) — named columns cut
-    # the per-row window work from 10 running aggregates to 3.
-    cnt, avg, sd = F.count("close").over(w), F.avg("close").over(w), F.stddev_pop("close").over(w)
-    df = df.withColumns({"__bb_cnt": cnt, "__bb_avg": avg, "__bb_sd": sd})
-    warm = F.col("__bb_cnt") >= period
-    mid = F.when(warm, F.col("__bb_avg")).otherwise(F.col("close"))
-    dev = F.when(warm, F.col("__bb_sd")).otherwise(F.lit(0.0))
-    df = (
-        df.withColumn("bb_mid", mid)
-        .withColumn("bb_upper", mid + nbdev * dev)
-        .withColumn("bb_lower", mid - nbdev * dev)
-        .drop("__bb_cnt", "__bb_avg", "__bb_sd")
-    )
-    width = F.col("bb_upper") - F.col("bb_lower")
-    return (
-        df.withColumn("bb_width", width)
-        .withColumn(
-            "bb_pos",
-            F.when(width != 0, (F.col("close") - F.col("bb_lower")) / width).otherwise(0.0),
-        )
-        .withColumn(
-            "bb_breakout",
-            ((F.col("close") > F.col("bb_upper")) | (F.col("close") < F.col("bb_lower"))).cast(
-                "int"
-            ),
-        )
-    )
+def _bollinger_sql(df: DataFrame, spec: str, period: int, nbdev: float) -> DataFrame:
+    """Bollinger columns over the window ``spec`` (a ``PARTITION BY
+    … ORDER BY …`` clause), with a trailing ``period``-row frame.
 
-
-def with_bollinger(
-    df: DataFrame, period: int = 20, nbdev: float = 2.0, blocked: bool = False
-) -> DataFrame:
-    """W6: Bollinger(20,2) + width/pos/breakout
-    (``src/candle_to_calcs.py:419-425``).
-
-    Spec (pinned, talib-compatible): mid = SMA(period) over the
-    trailing ROWS frame, bands = mid ± nbdev·stddev_pop (population
-    σ, like talib BBANDS), warm-up rows (<period) fall back to
-    ``close`` (the reference's ``fillna(df["close"])``).  The
-    reference's div-by-zero guard on bb_pos is a no-op bug
-    (``.replace(0,nan).fillna(0)`` round-trips); we implement the
-    intent: bb_pos = 0 when the band width is 0.
-
-    ``blocked=True`` evaluates the bounded frame with block-level
-    parallelism (operators/blocked.py) — identical results, no
-    one-task-per-symbol serialization at scale.
-    """
-    if blocked:
-        from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
-
-        return blocked_rows_window(
-            df, period - 1, lambda u, w, _base: _bollinger_cols(u, w, period, nbdev)
-        )
-    # String fast lane for the standard symbol window (round-10
-    # build-latency pass): the same expressions as _bollinger_cols in
-    # 4 py4j calls instead of ~60. The blocked path above keeps the
-    # Column form (its window spec is caller-supplied); tests pin the
-    # two lanes value-equal.
-    over = (
-        f"OVER (PARTITION BY symbol ORDER BY timestamp "
-        f"ROWS BETWEEN {period - 1} PRECEDING AND CURRENT ROW)"
-    )
+    Each window aggregate is evaluated ONCE into a named column:
+    referencing the raw window expressions from bb_upper/bb_lower as
+    well as bb_mid makes the Window operator carry count/avg three
+    times and stddev twice (Catalyst does not dedup window
+    expressions) — named columns cut the per-row window work from 10
+    running aggregates to 3. SQL text ships in 4 py4j calls, where
+    Column objects take ~60 (measured ~0.15 s more per build)."""
+    over = f"OVER ({spec} ROWS BETWEEN {period - 1} PRECEDING AND CURRENT ROW)"
     nb = f"CAST({nbdev!r} AS DOUBLE)"
     mid = f"CASE WHEN __bb_cnt >= {period} THEN __bb_avg ELSE close END"
     dev = f"CASE WHEN __bb_cnt >= {period} THEN __bb_sd ELSE CAST(0.0 AS DOUBLE) END"
@@ -249,31 +179,27 @@ def with_bollinger(
     )
 
 
-def _volume_spike_cols(df: DataFrame, w, spike_multiplier: float) -> DataFrame:
-    return df.withColumn("rolling_avg_volume", F.avg("volume").over(w)).withColumn(
-        "is_volume_spike",
-        (F.col("volume") > F.col("rolling_avg_volume") * spike_multiplier).cast("int"),
-    )
+def with_bollinger(df: DataFrame, period: int = 20, nbdev: float = 2.0) -> DataFrame:
+    """W6: Bollinger(20,2) + width/pos/breakout
+    (``src/candle_to_calcs.py:419-425``).
+
+    Spec (pinned, talib-compatible): mid = SMA(period) over the
+    trailing ROWS frame, bands = mid ± nbdev·stddev_pop (population
+    σ, like talib BBANDS), warm-up rows (<period) fall back to
+    ``close`` (the reference's ``fillna(df["close"])``).  The
+    reference's div-by-zero guard on bb_pos is a no-op bug
+    (``.replace(0,nan).fillna(0)`` round-trips); we implement the
+    intent: bb_pos = 0 when the band width is 0.
+    """
+    return _bollinger_sql(df, _SYMBOL_SPEC, period, nbdev)
 
 
-def with_volume_spike(
-    df: DataFrame, window: int = 60, spike_multiplier: float = 1.5, blocked: bool = False
+def _volume_spike_sql(
+    df: DataFrame, spec: str, window: int, spike_multiplier: float
 ) -> DataFrame:
-    """W10 (``src/candle_to_calcs.py:517-526``): trailing mean volume
-    (min_periods=1) and spike flag. ``blocked=True`` as in
-    :func:`with_bollinger`."""
-    if blocked:
-        from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
-
-        return blocked_rows_window(
-            df, window - 1, lambda u, w, _base: _volume_spike_cols(u, w, spike_multiplier)
-        )
-    # String fast lane, as in with_bollinger (blocked path keeps the
-    # Column form; tests pin the lanes value-equal).
-    over = (
-        f"OVER (PARTITION BY symbol ORDER BY timestamp "
-        f"ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW)"
-    )
+    """Volume-spike columns over the window ``spec`` (as in
+    :func:`_bollinger_sql`), with a trailing ``window``-row frame."""
+    over = f"OVER ({spec} ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW)"
     return df.selectExpr(
         "*", f"avg(volume) {over} AS rolling_avg_volume"
     ).selectExpr(
@@ -283,6 +209,14 @@ def with_volume_spike(
     )
 
 
+def with_volume_spike(
+    df: DataFrame, window: int = 60, spike_multiplier: float = 1.5
+) -> DataFrame:
+    """W10 (``src/candle_to_calcs.py:517-526``): trailing mean volume
+    (min_periods=1) and spike flag."""
+    return _volume_spike_sql(df, _SYMBOL_SPEC, window, spike_multiplier)
+
+
 def with_rolling_features_blocked(
     df: DataFrame,
     bb_period: int = 20,
@@ -290,20 +224,20 @@ def with_rolling_features_blocked(
     vol_window: int = 60,
     spike_multiplier: float = 1.5,
 ) -> DataFrame:
-    """Bollinger + volume spike in ONE blocked pass: both frame
+    """Bollinger + volume spike in ONE blocked pass (operators/blocked.py:
+    block-level parallelism with overlap carry, identical results to
+    :func:`with_bollinger` + :func:`with_volume_spike`): both frame
     families share a single sequence/overlap computation and a single
     window exchange (lookback = the larger frame). Chaining two
     blocked calls would rebuild the block machinery — and rescan the
     upstream plan — twice."""
     from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
 
-    lookback = max(bb_period, vol_window) - 1
+    def _both(u, spec):
+        u = _bollinger_sql(u, spec, bb_period, nbdev)
+        return _volume_spike_sql(u, spec, vol_window, spike_multiplier)
 
-    def _both(u, _w, base):
-        u = _bollinger_cols(u, base.rowsBetween(-(bb_period - 1), 0), bb_period, nbdev)
-        return _volume_spike_cols(u, base.rowsBetween(-(vol_window - 1), 0), spike_multiplier)
-
-    return blocked_rows_window(df, lookback, _both)
+    return blocked_rows_window(df, max(bb_period, vol_window) - 1, _both)
 
 
 def with_trend_labels(

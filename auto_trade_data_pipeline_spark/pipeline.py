@@ -60,21 +60,18 @@ def run_batch_pipeline(
     timeframe_seconds: int = 1,
     flush_secs: int = 300,
     output_dir: str | None = None,
-    blocked_windows: bool = False,
 ) -> PipelineResult:
     """Run the full reference DAG over a tick DataFrame and return all
     four logical tables (SURVEY §1.1). With ``output_dir`` set, each
-    table is also checkpointed to parquet (restartable stages).
-    ``blocked_windows=True`` routes the bounded ROWS windows through
-    the block-parallel evaluator (operators/blocked.py)."""
+    table is also checkpointed to parquet (restartable stages)."""
     valid, invalid = validate_split(ticks, tick_valid_predicate())
     candles = aggregate_candles(valid, timeframe_seconds)
     # Narrow native families first, the wide kernel last — no shuffle
     # ever moves the 119-column enriched rows.
     calculated = with_local_time(candles)
     calculated = with_session_flags(calculated)
-    calculated = with_bollinger(calculated, blocked=blocked_windows)
-    calculated = with_volume_spike(calculated, blocked=blocked_windows)
+    calculated = with_bollinger(calculated)
+    calculated = with_volume_spike(calculated)
     calculated = enrich_indicators(calculated)
     anchors = fill_anchored_vwap(
         anchored_vwap_points(candles, f"{timeframe_seconds}s", flush_secs), candles

@@ -27,6 +27,11 @@ AdaptiveSparkPlanExec, subquery-expression plans, and cached
 InMemoryTableScan plans; streaming replays record their last
 micro-batch's audit via :func:`audit_streaming_query` (asserted
 corpus-wide by tests/test_plans.py's streaming sibling sweep).
+
+The same walker serves :func:`shuffle_operators`, the raw-scan check
+behind ``sources.files.fan_out_scan``: it matches node classes of the
+optimized logical plan, never the rendered plan text, so a column or
+path named like an operator cannot trip it.
 """
 
 from __future__ import annotations
@@ -52,6 +57,27 @@ _BOUNDING = frozenset(
 
 _WINDOW_NODES = frozenset({"WindowExec", "WindowInPandasExec", "WindowGroupLimitExec"})
 
+#: Node classes that put a shuffle (or the sort feeding one) into a
+#: lineage: optimized-logical operators (the optimizer has already
+#: rewritten Distinct/Deduplicate into Aggregate), plus the physical
+#: exchanges and sorts met inside a cached relation's plan.
+_SHUFFLING = frozenset(
+    {
+        "Aggregate",
+        "GlobalLimit",
+        "Join",
+        "RebalancePartitions",
+        "Repartition",
+        "RepartitionByExpression",
+        "Sort",
+        "Window",
+        "WindowGroupLimit",
+        "BroadcastExchangeExec",
+        "ShuffleExchangeExec",
+        "SortExec",
+    }
+)
+
 
 def _walk(jplan, subqueries: bool = True):
     """Depth-first over the physical plan, descending through the
@@ -67,7 +93,10 @@ def _walk(jplan, subqueries: bool = True):
     plan that merely references it (a scalar-subquery filter under an
     unpartitioned window must not whitelist that window), while AQE
     initialPlan and the cached InMemoryTableScan plan ARE the
-    row-producing dataflow and stay in both walks."""
+    row-producing dataflow and stay in both walks.
+
+    On a logical plan the same walk descends subquery plans and, at
+    an ``InMemoryRelation``, the physical plan that fills the cache."""
     yield jplan
     name = jplan.getClass().getSimpleName()
     if name == "AdaptiveSparkPlanExec":
@@ -75,6 +104,8 @@ def _walk(jplan, subqueries: bool = True):
         return
     if name == "InMemoryTableScanExec":
         yield from _walk(jplan.relation().cachedPlan(), subqueries)
+    if name == "InMemoryRelation":
+        yield from _walk(jplan.cachedPlan(), subqueries)
     if subqueries:
         subs = jplan.subqueries()
         for i in range(subs.size()):
@@ -104,6 +135,21 @@ def unbounded_single_partition_windows(df: DataFrame) -> list[str]:
     in the same plan to bound its input row count. Empty list = plan
     is clean under the whitelist rule."""
     return _offenders(df._jdf.queryExecution().executedPlan())
+
+
+def shuffle_operators(df: DataFrame) -> list[str]:
+    """Return the class names of the nodes in ``df``'s optimized
+    logical plan (subqueries and cached plans included) that put a
+    shuffle into its lineage. Empty list = a raw scan, possibly under
+    row-local projections and filters."""
+    return [
+        name
+        for name in (
+            n.getClass().getSimpleName()
+            for n in _walk(df._jdf.queryExecution().optimizedPlan())
+        )
+        if name in _SHUFFLING
+    ]
 
 
 #: Audit results for streaming replays, keyed by writeStream query

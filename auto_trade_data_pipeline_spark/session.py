@@ -19,6 +19,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Share of physical memory the driver heap defaults to. The rest
+#: covers the JVM's off-heap use (metaspace, code cache, Arrow and
+#: shuffle buffers) and the Python workers, so the heap feels GC
+#: pressure before the host runs out of memory.
+HEAP_SHARE = 0.6
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` default: ``HEAP_SHARE`` of physical
+    memory (``MemTotal`` in ``/proc/meminfo``, else the page count),
+    in whole GiB, at least 1g. On a 15.7 GiB host this is ``9g``."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+        total = kib * 1024
+    except (OSError, StopIteration):
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(total * HEAP_SHARE / 2**30))}g"
+
 
 def get_spark(
     app_name: str = "auto_trade_data_pipeline_spark",
@@ -33,6 +52,10 @@ def get_spark(
     shuffle partition per core is right, 200 would just add scheduling
     overhead on small inputs (AQE coalesces anyway, but starting right
     is free).
+
+    ``SPARK_GRAFT_DRIVER_MEM`` sets ``spark.driver.memory``; unset, the
+    heap is :func:`default_driver_memory` (about 60% of physical
+    memory), never more than the host has.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
@@ -51,7 +74,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Let the planner pick shuffled-hash join when its build side

@@ -3,7 +3,6 @@ REST-paginated batch source adapter, and the Spark 4 Python
 DataSource form of the same API (`format("trade_rest")`)."""
 
 from auto_trade_data_pipeline_spark.sources.files import (
-    N_TICK_SYMBOLS,
     fan_out_scan,
     load_table,
     read_candles,
@@ -13,7 +12,6 @@ from auto_trade_data_pipeline_spark.sources.files import (
 from auto_trade_data_pipeline_spark.sources.pyds import TickRestDataSource
 
 __all__ = [
-    "N_TICK_SYMBOLS",
     "fan_out_scan",
     "load_table",
     "read_ticks",

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from auto_trade_data_pipeline_spark import schemas
+from auto_trade_data_pipeline_spark.plan_audit import shuffle_operators
 
 #: The reference's on-disk timestamp format (``fetch_historical_trades_nvda.py:48``):
 #: "2024-01-02 14:30:00.123456 UTC".  For Spark's parser the literal
@@ -72,13 +73,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return schemas.assert_schema(df, expected, table=name)
 
 
-#: Distinct ``event_type`` values in the driver's events table at
-#: every sf (signup/error/click/view/purchase) — the symbol
-#: cardinality of the tick tape, used as the key-cardinality hint for
-#: the recursive-scan shape routing (operators/jvm_folds.py).
-N_TICK_SYMBOLS = 5
-
-
 def fan_out_scan(df: DataFrame) -> DataFrame:
     """Spread a scan whose file layout yields fewer input splits than
     the session's parallelism (guide §2.5 "input skew": the driver
@@ -107,14 +101,15 @@ def fan_out_scan(df: DataFrame) -> DataFrame:
     converting a plan that CONTAINS shuffles to an RDD eagerly
     executes its query stages at build time — a silent
     whole-subquery materialization. Asserted below rather than
-    documented-only (r9 advice): the helper is exported API."""
+    documented-only (r9 advice): the helper is exported API. The check
+    walks the optimized logical plan's node classes
+    (``plan_audit.shuffle_operators``)."""
     spark = df.sparkSession
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    shuffly = ("Repartition", "Sort ", "Aggregate", "Join", "Window", "Distinct")
-    if any(tok in plan for tok in shuffly):
+    shuffly = shuffle_operators(df)
+    if shuffly:
         raise ValueError(
             "fan_out_scan expects a raw scan (no shuffle in lineage); "
-            "got a plan containing a shuffle-introducing operator — "
+            f"got a plan containing {sorted(set(shuffly))} — "
             "probing its partition count via .rdd would eagerly "
             "execute the upstream query stages under AQE"
         )

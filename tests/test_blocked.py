@@ -5,9 +5,10 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from pyspark.sql import functions as F
-
+from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
 from auto_trade_data_pipeline_spark.operators.windows import (
+    _bollinger_sql,
+    _volume_spike_sql,
     with_bollinger,
     with_volume_spike,
 )
@@ -42,39 +43,34 @@ def _collect(df, cols):
     return sorted(tuple(r[c] for c in ("symbol", "timestamp", *cols)) for r in df.collect())
 
 
+def _blocked(df, lookback, build):
+    """``build(frame, spec)`` through the blocked evaluator at 64-row
+    blocks: 300 rows per symbol span 5 blocks, so every block after
+    the first starts on overlap carry, across day boundaries."""
+    return blocked_rows_window(df, lookback, build, block_size=64)
+
+
 def test_blocked_bollinger_bit_identical(spark):
     df = _candles(spark)
     cols = ["bb_mid", "bb_upper", "bb_lower", "bb_width", "bb_pos", "bb_breakout"]
     plain = _collect(with_bollinger(df), cols)
-    # Tiny blocks force many carries, including across day boundaries.
-    blocked = _collect(with_bollinger(df, blocked=True), cols)
+    blocked = _collect(_blocked(df, 19, lambda u, spec: _bollinger_sql(u, spec, 20, 2.0)), cols)
     assert plain == blocked
 
 
 def test_blocked_volume_spike_bit_identical_small_blocks(spark):
-    from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
-    from auto_trade_data_pipeline_spark.operators.windows import _volume_spike_cols
-
     df = _candles(spark)
     cols = ["rolling_avg_volume", "is_volume_spike"]
     plain = _collect(with_volume_spike(df), cols)
     tiny = _collect(
-        blocked_rows_window(
-            df, 59, lambda u, w, _b: _volume_spike_cols(u, w, 1.5), block_size=64
-        ),
-        cols,
+        _blocked(df, 59, lambda u, spec: _volume_spike_sql(u, spec, 60, 1.5)), cols
     )
     assert plain == tiny
 
 
 def test_blocked_plan_partitions_by_block_not_symbol(spark):
-    from auto_trade_data_pipeline_spark.operators.blocked import blocked_rows_window
-    from auto_trade_data_pipeline_spark.operators.windows import _bollinger_cols
-
     df = _candles(spark)
-    out = blocked_rows_window(
-        df, 19, lambda u, w, _b: _bollinger_cols(u, w, 20, 2.0), block_size=64
-    )
+    out = _blocked(df, 19, lambda u, spec: _bollinger_sql(u, spec, 20, 2.0))
     plan = out._jdf.queryExecution().executedPlan().toString()
     # The window exchange is keyed on (symbol, __grp) — parallelism
     # scales with blocks (data volume), not symbol cardinality.

@@ -580,3 +580,71 @@ def test_holt_winters_matches_naive_reference_and_tracks_trend():
     fc = (lvl + trd)[:-1]
     naive = z[:-1]
     assert np.mean((fc - z[1:]) ** 2) < np.mean((naive - z[1:]) ** 2) * 1.1
+
+
+def _ta_scan_tape(spark):
+    """Two symbols of random-walk closes, rows fed in reverse order;
+    symbol B opens with a NULL warm-up prefix (the cascaded-EMA shape)."""
+    rng = np.random.RandomState(7)
+    tapes = {
+        "A": list(np.round(100.0 + np.cumsum(rng.randn(257) * 0.5), 4)),
+        "B": [None] * 25 + list(np.round(50.0 + np.cumsum(rng.randn(120) * 0.5), 4)),
+    }
+    rows = [
+        (sym, i, None if v is None else float(v))
+        for sym, vals in tapes.items()
+        for i, v in enumerate(vals)
+    ]
+    df = spark.createDataFrame(rows[::-1], "symbol string, i int, close double")
+    arrays = {s: np.array([np.nan if v is None else v for v in t]) for s, t in tapes.items()}
+    return df, arrays
+
+
+def test_ta_scan_by_key_matches_kernels_with_null_warmup(spark):
+    """ta_scan_by_key runs each kernel over the key's tape sorted on
+    the order column: every double equals the kernel's on that tape,
+    NULL inputs reach the kernel as NaN, and NaN outputs come back as
+    NULL — the warm-up contract the DuckDB oracles compare against."""
+    from auto_trade_data_pipeline_spark.operators.indicators import ta_scan_by_key
+
+    df, arrays = _ta_scan_tape(spark)
+    out = ta_scan_by_key(
+        df,
+        ["symbol"],
+        "i",
+        ["close"],
+        {
+            "ema12": ("double", lambda pdf: ta.ema(pdf["close"].to_numpy(dtype=float), 12)),
+            "kx": (
+                "double",
+                lambda pdf: ta.kalman_filter(pdf["close"].to_numpy(dtype=float), 1e-5, 0.01),
+            ),
+        },
+    )
+    assert out.columns == ["symbol", "i", "close", "ema12", "kx"]
+    got = {(r["symbol"], r["i"]): (r["ema12"], r["kx"]) for r in out.collect()}
+    for sym, px in arrays.items():
+        e12, kx = ta.ema(px, 12), ta.kalman_filter(px, 1e-5, 0.01)
+        for i in range(len(px)):
+            want = tuple(None if np.isnan(v) else float(v) for v in (e12[i], kx[i]))
+            assert got[(sym, i)] == want, f"{sym}[{i}]"
+
+
+def test_ta_scan_by_key_struct_output(spark):
+    """A struct-typed output (Holt level + trend) crosses the Arrow
+    dict-to-struct conversion bit-exactly."""
+    from auto_trade_data_pipeline_spark.operators.indicators import ta_scan_by_key
+
+    df, arrays = _ta_scan_tape(spark)
+    df = df.filter("symbol = 'A'")
+
+    def hw_np(pdf):
+        lev, tr = ta.holt_linear(pdf["close"].to_numpy(dtype=float), 0.3, 0.1)
+        return [{"l": float(li), "b": float(bi)} for li, bi in zip(lev, tr)]
+
+    out = ta_scan_by_key(
+        df, ["symbol"], "i", ["close"], {"hw": ("struct<l: double, b: double>", hw_np)}
+    )
+    got = {r["i"]: (r["hw"]["l"], r["hw"]["b"]) for r in out.collect()}
+    lev, tr = ta.holt_linear(arrays["A"], 0.3, 0.1)
+    assert got == {i: (float(li), float(bi)) for i, (li, bi) in enumerate(zip(lev, tr))}

@@ -1,7 +1,8 @@
 """The round-8 diagnostic instruments: probe_cc_bimodal's event-log
-digest (stage/job/GC/skew extraction, zstd rolling segments) and
-canary.py's contamination audit. These adjudicate every future
-perf number, so their parsing must not rot silently."""
+digest (stage/job/GC/skew extraction, zstd rolling segments),
+canary.py's contamination audit and scaling_sf1's merge arithmetic.
+These adjudicate every future perf number, so their parsing must not
+rot silently."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ sys.path.insert(0, os.path.join(REPO, "tools"))
 
 import canary  # noqa: E402
 import probe_cc_bimodal as probe  # noqa: E402
+import scaling_sf1  # noqa: E402
 
 
 def _write_eventlog(dirpath: str, app_id: str, compress: bool) -> None:
@@ -85,3 +87,13 @@ def test_canary_audit_gates(tmp_path):
         + "\n".join(json.dumps({"t": now + 100 + i, "ms": 18.0}) for i in range(20))
     )
     assert canary.audit(str(log), now + 99, now + 130) == 0
+
+
+def test_scaling_merge_rounded_zero_time_gives_null_ratio():
+    rows = scaling_sf1.merge_rows(
+        {"fast": 0.0, "slow": 2.0, "only32": 1.0}, {"fast": 0.004, "slow": 3.0}
+    )
+    assert rows == {
+        "fast": {"c32_sec": 0.0, "c8_sec": 0.004, "c8_over_c32": None},
+        "slow": {"c32_sec": 2.0, "c8_sec": 3.0, "c8_over_c32": 1.5},
+    }

@@ -709,59 +709,6 @@ def test_cdc_apply_matches_sequential_replay(chg):
     assert {r.k: r.payload for r in out.collect()} == ref
 
 
-#: Price walks with an optional leading-NULL prefix (cascaded-EMA
-#: shape) — both scan_by_key arms must agree bit-for-bit on any draw.
-walk_strategy = st.tuples(
-    st.integers(min_value=0, max_value=8),   # leading NULLs
-    st.lists(
-        st.floats(min_value=0.5, max_value=500.0, allow_nan=False, width=32),
-        min_size=1,
-        max_size=80,
-    ),
-)
-
-
-@given(walk_strategy, walk_strategy)
-@_settings
-def test_scan_routing_arms_agree_on_any_tape(wa, wb):
-    """Round-6 shape routing: the JVM aggregate() fold and the numpy
-    applyInPandas kernels are ONE operator with two backends — for
-    any tape (random walk, random leading-NULL warm-up prefix,
-    multiple symbols) every output double and NULL must be identical,
-    so routing can never change results."""
-    from auto_trade_data_pipeline_spark.functions import ta
-    from auto_trade_data_pipeline_spark.operators import jvm_folds as jf
-
-    rows = []
-    for sym, (nulls, vals) in (("A", wa), ("B", wb)):
-        seq = [None] * nulls + [float(v) for v in vals]
-        rows += [(sym, i, v) for i, v in enumerate(seq)]
-    df = _spark.createDataFrame(rows, "symbol string, i int, close double")
-    scans = {
-        "e5": jf.ema_scan_sql("transform(s, e -> e.close)", 5),
-        "kx": jf.kalman_scan_sql("transform(s, e -> e.close)", 1e-5, 0.01),
-    }
-    numpy_scans = {
-        "e5": ("double", lambda pdf: ta.ema(pdf["close"].to_numpy(dtype=float), 5)),
-        "kx": (
-            "double",
-            lambda pdf: ta.kalman_filter(pdf["close"].to_numpy(dtype=float), 1e-5, 0.01),
-        ),
-    }
-    args = (df, ["symbol"], "i", ["close"], scans)
-    jvm = {
-        (r["symbol"], r["i"]): (r["e5"], r["kx"])
-        for r in jf.scan_by_key(*args, numpy_scans=numpy_scans, rows_per_key=1).collect()
-    }
-    np_ = {
-        (r["symbol"], r["i"]): (r["e5"], r["kx"])
-        for r in jf.scan_by_key(
-            *args, numpy_scans=numpy_scans, rows_per_key=10**9
-        ).collect()
-    }
-    assert jvm == np_
-
-
 #: Token-count tapes for the packing fold: including zeros (empty
 #: docs), counts at exactly the capacity, and oversize items.
 pack_strategy = st.lists(

@@ -511,3 +511,17 @@ def test_schema_evolution_merge_read(spark, tmp_path):
             spark, d,
             expected_schema="id long, sym string, price int, quality double",
         )
+
+
+def test_fan_out_scan_guard_reads_plan_nodes_not_names(spark, tmp_path):
+    """The raw-scan guard walks plan node classes: a raw scan whose
+    column name spells operators is accepted (row-preserving), and an
+    aggregate over it still raises."""
+    from auto_trade_data_pipeline_spark.sources import fan_out_scan
+
+    path = str(tmp_path / "Window Sort .parquet")
+    spark.range(10).withColumnRenamed("id", "Join_Sort_Window").write.parquet(path)
+    raw = spark.read.parquet(path)
+    assert sorted(r[0] for r in fan_out_scan(raw).collect()) == list(range(10))
+    with pytest.raises(ValueError, match="Aggregate"):
+        fan_out_scan(raw.groupBy("Join_Sort_Window").count())

@@ -82,20 +82,28 @@ def run() -> int:
     return 0
 
 
+def merge_rows(c32: dict[str, float], c8: dict[str, float]) -> dict[str, dict]:
+    """Per-query seconds at both core counts and their 8c/32c ratio.
+    Timings are stored rounded to the millisecond, so a sub-millisecond
+    32-core time reads 0.0; its ratio is ``None`` (JSON null), not a
+    division error."""
+    return {
+        n: {
+            "c32_sec": c32[n],
+            "c8_sec": c8[n],
+            "c8_over_c32": round(c8[n] / c32[n], 2) if c32[n] else None,
+        }
+        for n in c32
+        if n in c8
+    }
+
+
 def merge() -> int:
     with open(os.path.join(_REPO, ".scaling_c32.json")) as fh:
         c32 = json.load(fh)
     with open(os.path.join(_REPO, ".scaling_c8.json")) as fh:
         c8 = json.load(fh)
-    rows = {
-        n: {
-            "c32_sec": c32[n],
-            "c8_sec": c8[n],
-            "c8_over_c32": round(c8[n] / c32[n], 2),
-        }
-        for n in c32
-        if n in c8
-    }
+    rows = merge_rows(c32, c8)
     doc = {
         "sf_dir": SF1,
         "method": f"noop sink, min of {PASSES} passes, caches cleared "
